@@ -204,12 +204,11 @@ class SparkStores:
         return out
 
     def sql_stats(self, since_exec: int) -> dict:
-        """Python-boundary metrics and operator counts over SQL executions
-        after ``since_exec``. Rows into a Python node are its children's
-        output rows."""
+        """Python-boundary metrics over SQL executions after ``since_exec``.
+        Rows into a Python node are its children's output rows."""
         self.drain()
         out = {"python.rows_in": 0.0, "python.bytes_in": 0.0, "python.bytes_out": 0.0,
-               "python.time_ms": 0.0, "python.worker_start_ms": 0.0, "plan.operators": 0}
+               "python.time_ms": 0.0, "python.worker_start_ms": 0.0}
         execs = self.sql.executionsList()
         for i in range(execs.size()):
             eid = execs.apply(i).executionId()
@@ -221,7 +220,6 @@ class SparkStores:
             rows_out, python = {}, []
             for k in range(nodes.size()):
                 node = nodes.apply(k)
-                out["plan.operators"] += 1
                 ms = node.metrics()
                 for q in range(ms.size()):
                     met = ms.apply(q)

@@ -159,7 +159,7 @@ class Task:
             time.sleep(0.02)
 
     def progress(self) -> list[dict]:
-        return [json.loads(p.json) if hasattr(p, "json") else p for p in self.q.recentProgress]
+        return [json.loads(p.json) for p in self.q.recentProgress]
 
 
 def _publish(spool: str, ev, first: int, n: int, name: str) -> str:
