@@ -13,6 +13,9 @@ seed, so equal seeds give byte-identical inputs:
   the word ``dup``).
 * line-protocol spool files for the stream workload, written on a fixed
   schedule by the open-loop generator process (``python3 gen.py spool``).
+  Every ``SLOW_EVERY``-th point also carries its ``props`` as a quoted
+  string field with escaped quotes, the shape that takes the Python
+  branch of ``parse_lines``.
 """
 
 from __future__ import annotations
@@ -42,6 +45,7 @@ VOCAB = (
 LANGS = ("en", "zh", "de", "fr", "es")
 LANG_P = (0.41, 0.15, 0.14, 0.15, 0.15)
 N_SOURCES = 20
+SLOW_EVERY = 20
 
 
 def _rng(seed: int, stream: str) -> np.random.Generator:
@@ -114,13 +118,14 @@ def write_tables(seed: int, out_dir: str) -> str:
 
 def lp_lines(ev: pd.DataFrame) -> list[str]:
     ts_ns = ev["ts"].astype("int64").to_numpy()
-    return [
-        f"events,event_type={t},user_id={u} value={v!r},event_id={i}i {n}"
-        for t, u, v, i, n in zip(
-            ev["event_type"], ev["user_id"], ev["value"].astype(float),
-            ev["event_id"], ts_ns,
-        )
-    ]
+    out = []
+    for t, u, v, i, p, n in zip(ev["event_type"], ev["user_id"], ev["value"].astype(float),
+                                ev["event_id"], ev["props"], ts_ns):
+        extra = ""
+        if i % SLOW_EVERY == 0:
+            extra = ',props="' + p.replace("\\", "\\\\").replace('"', '\\"') + '"'
+        out.append(f"events,event_type={t},user_id={u} value={v!r},event_id={i}i{extra} {n}")
+    return out
 
 
 def write_spool_file(spool: str, name: str, lines: list[str]) -> None:
@@ -160,8 +165,8 @@ def run_spool(args) -> None:
         if delay > 0:
             time.sleep(delay)
         lo = first - args.first
-        write_spool_file(args.spool, f"{args.prefix}{k:06d}.lp", lines[lo:lo + n])
-        log.append([f"{args.prefix}{k:06d}.lp", t_start + due, time.time(), first, n])
+        write_spool_file(args.spool, f"live{k:06d}.lp", lines[lo:lo + n])
+        log.append([f"live{k:06d}.lp", t_start + due, time.time(), first, n])
     with open(args.log, "w") as fh:
         json.dump(log, fh)
 
@@ -178,7 +183,6 @@ def main(argv=None) -> None:
     sp.add_argument("--rate", type=float, required=True)
     sp.add_argument("--interval", type=float, required=True)
     sp.add_argument("--start", type=float, required=True)
-    sp.add_argument("--prefix", default="live")
     args = ap.parse_args(argv)
     if args.cmd == "spool":
         run_spool(args)

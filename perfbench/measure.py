@@ -12,6 +12,11 @@ import tempfile
 import threading
 import time
 
+RSS_PERIOD_S = 0.25            # /proc sampling period of RssSampler
+CPU_PROBE_ROWS = 100_000_000   # rows the CPU probe folds
+IO_PROBE_FILES = 200           # small files the I/O probe writes, reads, deletes
+IO_PROBE_BYTES = 8192          # size of each of them
+
 
 def percentile(values, p: float) -> float:
     """Nearest-rank percentile (p in 0..100) of a non-empty sequence."""
@@ -123,12 +128,11 @@ def process_tree(root: int) -> list[int]:
 
 class RssSampler:
     """Samples the summed RSS of a process tree (the driver JVM, which
-    forks the Python worker daemon and its workers) every ``period``
+    forks the Python worker daemon and its workers) every ``RSS_PERIOD_S``
     seconds; ``peak_mb`` is the highest sum seen."""
 
-    def __init__(self, root_pid: int, period: float = 0.25):
+    def __init__(self, root_pid: int):
         self.root_pid = root_pid
-        self.period = period
         self.peak_kb = 0
         self.peak_parts: dict = {}
         self._stop = threading.Event()
@@ -137,7 +141,7 @@ class RssSampler:
     def _run(self) -> None:
         while not self._stop.is_set():
             self.sample()
-            self._stop.wait(self.period)
+            self._stop.wait(RSS_PERIOD_S)
 
     def sample(self) -> None:
         per = [_rss_kb(p) for p in process_tree(self.root_pid)]
@@ -164,12 +168,12 @@ class RssSampler:
 # --------------------------------------------------------------------- #
 
 
-def cpu_probe(spark, parallelism: int, rows: int = 100_000_000) -> float:
+def cpu_probe(spark, parallelism: int) -> float:
     """Seconds for a cache-free codegen'd hash fold, with its partition
     count pinned to the session's core count; best of 2 after a warmup."""
     def once():
         t0 = time.perf_counter()
-        spark.range(0, rows, 1, parallelism).selectExpr(
+        spark.range(0, CPU_PROBE_ROWS, 1, parallelism).selectExpr(
             "bit_xor(xxhash64(id, xxhash64(id))) AS s").collect()
         return time.perf_counter() - t0
 
@@ -177,24 +181,24 @@ def cpu_probe(spark, parallelism: int, rows: int = 100_000_000) -> float:
     return min(once(), once())
 
 
-def io_probe(base: str, files: int = 200, size: int = 8192) -> float:
-    """Seconds to write+fsync, read and delete ``files`` small files under
-    ``base`` (the filesystem the checkpoints use); best of 3."""
-    payload = b"\xa5" * size
+def io_probe(base: str) -> float:
+    """Seconds to write+fsync, read and delete ``IO_PROBE_FILES`` small
+    files under ``base`` (the filesystem the checkpoints use); best of 3."""
+    payload = b"\xa5" * IO_PROBE_BYTES
 
     def once():
         d = tempfile.mkdtemp(prefix="io_probe_", dir=base)
         t0 = time.perf_counter()
         try:
-            for i in range(files):
+            for i in range(IO_PROBE_FILES):
                 with open(os.path.join(d, f"f{i}"), "wb") as fh:
                     fh.write(payload)
                     fh.flush()
                     os.fsync(fh.fileno())
-            for i in range(files):
+            for i in range(IO_PROBE_FILES):
                 with open(os.path.join(d, f"f{i}"), "rb") as fh:
                     fh.read()
-            for i in range(files):
+            for i in range(IO_PROBE_FILES):
                 os.unlink(os.path.join(d, f"f{i}"))
             return time.perf_counter() - t0
         finally:

@@ -205,7 +205,9 @@ class SparkStores:
 
     def sql_stats(self, since_exec: int) -> dict:
         """Python-boundary metrics over SQL executions after ``since_exec``.
-        Rows into a Python node are its children's output rows."""
+        Rows into a Python node are the output rows of the nearest node
+        below it that counts them (an exchange or shuffle read between
+        them does not)."""
         self.drain()
         out = {"python.rows_in": 0.0, "python.bytes_in": 0.0, "python.bytes_out": 0.0,
                "python.time_ms": 0.0, "python.worker_start_ms": 0.0}
@@ -234,11 +236,16 @@ class SparkStores:
                         out[key] += val
                 if any(p in node.name() for p in PYTHON_NODES):
                     python.append(node.id())
+            child = {}
             edges = graph.edges()
             for k in range(edges.size()):
                 e = edges.apply(k)
-                if e.toId() in python:
-                    out["python.rows_in"] += rows_out.get(e.fromId(), 0.0)
+                child.setdefault(e.toId(), e.fromId())
+            for nid in python:
+                nid = child.get(nid)
+                while nid is not None and nid not in rows_out:
+                    nid = child.get(nid)
+                out["python.rows_in"] += rows_out.get(nid, 0.0)
         return out
 
 

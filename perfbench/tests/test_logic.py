@@ -160,6 +160,20 @@ def test_generated_events_keep_the_fixture_shape():
     assert 45 < ev["value"].mean() < 55
 
 
+def test_every_twentieth_line_takes_the_quoted_string_path_and_parses_back():
+    from kapacitor_spark.sources.line_protocol import parse_line
+
+    ev = gen.events(5).iloc[:200]
+    lines = gen.lp_lines(ev)
+    quoted = [i for i, line in enumerate(lines) if '"' in line]
+    assert quoted == list(range(0, 200, gen.SLOW_EVERY))
+    for i in (0, 1, gen.SLOW_EVERY):
+        p = parse_line(lines[i])
+        assert p["fields_f"]["value"] == ev["value"].iloc[i]
+        assert p["fields_i"]["event_id"] == i
+        assert p["fields_s"].get("props") == (ev["props"].iloc[i] if i in quoted else None)
+
+
 def test_spool_schedule_is_fixed_and_complete():
     s = gen.spool_schedule(first=100, n_points=1000, rate=200.0, interval=0.1)
     assert sum(k for *_r, k in s) == 1000

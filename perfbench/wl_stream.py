@@ -282,7 +282,7 @@ def run(ctx) -> dict:
         layer["trace.uncovered_share"] = 1.0 - min(cover.values())
         detail["progress_phase_coverage"] = cover
     return {"e2e": e2e, "layer": layer, "detail": detail, "checks": results,
-            "attempted": n_batches + len(results)}
+            "attempted": n_batches + len(results), "first_result_s": warmup_s}
 
 
 def _check_outputs(ctx, streamed, alert, window) -> list[dict]:
@@ -368,23 +368,16 @@ def _epoch(ts: str) -> float:
 
 
 def _parse_layer(ctx, spool: str) -> dict:
-    """sources.*: parse_lines over a static copy of the spool."""
-    import re
-
+    """sources.*: parse_lines over a static copy of the spool. The lines
+    that took the Python parser are the rows into its Python node."""
     from kapacitor_spark.sources.line_protocol import parse_lines
 
-    simple = re.compile(r"^[^ #][^ ]* [^ ]+( -?\d+)?$")
-    lines = slow = 0
-    for f in glob.glob(os.path.join(spool, "*.lp")):
-        with open(f) as fh:
-            for line in fh:
-                line = line.rstrip("\n")
-                lines += 1
-                slow += ('"' in line or "\\" in line or not simple.match(line))
     raw = ctx.spark.read.text(spool)
-    raw.count()
+    lines = raw.count()
+    mark = ctx.stores.mark()
     t0 = time.perf_counter()
     parse_lines(raw).write.format("noop").mode("overwrite").save()
     dt = time.perf_counter() - t0
+    slow = ctx.stores.sql_stats(mark[0])["python.rows_in"]
     return {"sources.lp_parse_pts_per_s": lines / dt, "sources.lp_slow_rows": slow,
             "sources.lp_slow_ratio": slow / max(1, lines)}
