@@ -715,8 +715,8 @@ def state_tracking(spark, sf_dir):
     running boundary sum (pure window functions, no Python state). Both
     outputs share one streak computation + one per-streak window
     (Pipeline._state_track — the chained state_count().state_duration()
-    build runs the identical machinery twice: 6 Window / 4 Sort vs
-    4 Window / 2 Sort fused, same values)."""
+    build runs the identical machinery twice: 6 Window / 4 Sort vs at
+    most 3 Window / 2 Sort fused, same values)."""
     p = _events_by_user(spark, sf_dir)._state_track(
         "value > 100", "1s", "state_n", "state_dur"
     )

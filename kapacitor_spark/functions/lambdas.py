@@ -336,7 +336,8 @@ class _NumpyParser:
     (Spark disallows a second stateful operator after an aggregation).
     The reference evaluates the identical grammar per point in-process
     (/root/reference/tick/stateful/expr.go) — this is that interpreter,
-    vectorized over the emitted window rows of one key and micro-batch.
+    vectorized over the emitted window rows of one hash bucket (all its
+    keys) and micro-batch.
 
     Divergence mirror: ``/`` and ``%`` by zero yield NaN (Catalyst
     try_divide/try_mod yield NULL); NaN comparisons are False either way.

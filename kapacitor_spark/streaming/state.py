@@ -1,6 +1,6 @@
 """Per-group alert state machine (SURVEY §2.10) — the sequential core shared
 by batch mode (applyInPandas over complete groups) and streaming mode
-(applyInPandasWithState across micro-batches).
+(applyInPandasWithState over hash buckets of groups, across micro-batches).
 
 Reference semantics (/root/reference/alert.go):
 * level per point = first matching of CRITICAL > WARNING > INFO else OK
@@ -16,9 +16,12 @@ Reference semantics (/root/reference/alert.go):
   while flapping.
 * noRecoveries (pipeline/alert.go:500): drop transitions INTO OK.
 
-The walk is O(n) per group in plain Python over numpy arrays — it runs once
-per group per (micro)batch on Arrow-transferred data, not per point through
-an interpreter.
+The walk is O(n) per group in plain Python over numpy arrays, on
+Arrow-transferred data, not per point through an interpreter. Batch mode runs
+it once per group. Streaming runs it once per group per micro-batch over that
+group's slice of its hash bucket, every group of a bucket inside ONE Python
+call (streaming._bucketed_state); the bucket's state row holds the machine
+state of each of its groups.
 """
 
 from __future__ import annotations

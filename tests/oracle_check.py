@@ -24,6 +24,17 @@ TABLES = [
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
+# Streaming replays pin spark.sql.shuffle.partitions for the blocking
+# run (run_available_now) — a session-wide conf that concurrent query
+# builds must not race. Queries whose names carry one of these markers go
+# through the streaming machinery and run serially after the parallel
+# batch sweep (tests/test_oracle_all.py, tests/test_driver_contract.py).
+SERIAL_MARKERS = ("stream", "tick_")
+
+
+def is_serial(name: str) -> bool:
+    return any(m in name for m in SERIAL_MARKERS)
+
 
 def _norm(df: pd.DataFrame) -> pd.DataFrame:
     df = df.reindex(sorted(df.columns), axis=1)

@@ -17,6 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 import bench
+from tests.oracle_check import is_serial
 
 
 def test_scored_window_is_curated_and_oracled():
@@ -155,8 +156,8 @@ def test_schema_exactness_vs_oracle(spark, sf_dir):
     # batch builds are driver-side plan analysis that threads overlap
     # fine (guide §2.6).
     items = list(entry_mod.queries().items())
-    parallel = [i for i in items if not any(m in i[0] for m in ("stream", "tick_"))]
-    serial = [i for i in items if any(m in i[0] for m in ("stream", "tick_"))]
+    parallel = [i for i in items if not is_serial(i[0])]
+    serial = [i for i in items if is_serial(i[0])]
     with ThreadPoolExecutor(max_workers=6) as pool:
         list(pool.map(check, parallel))
     for i in serial:

@@ -30,7 +30,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
-from tests.oracle_check import TABLES, compare
+from tests.oracle_check import TABLES, compare, is_serial
 
 _QUERIES = entry_mod.queries()
 _ORACLES = entry_mod.oracle_sql()
@@ -46,16 +46,6 @@ _MIN_SF001 = {
     # oracles key the per-SF golden off the fixture's content checksum
     # (r9), so they run — and are asserted — at every SF.
 }
-
-# Streaming replays pin spark.sql.shuffle.partitions for the blocking
-# run (run_available_now) — a session-wide conf that concurrent query
-# builds must not race. Queries that go through the streaming machinery
-# run sequentially after the parallel batch sweep.
-_SERIAL_MARKERS = ("stream", "tick_")
-
-
-def _is_serial(name: str) -> bool:
-    return any(m in name for m in _SERIAL_MARKERS)
 
 
 _local = threading.local()
@@ -91,8 +81,8 @@ def sweep(spark, sf_dir):
         except Exception as e:  # surfaced by the owning test
             results[name] = [f"exception: {type(e).__name__}: {e}"]
 
-    parallel = [n for n in _QUERIES if not _is_serial(n)]
-    serial = [n for n in _QUERIES if _is_serial(n)]
+    parallel = [n for n in _QUERIES if not is_serial(n)]
+    serial = [n for n in _QUERIES if is_serial(n)]
     with ThreadPoolExecutor(max_workers=6) as pool:
         list(pool.map(run, parallel))
     for n in serial:
